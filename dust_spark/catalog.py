@@ -44,9 +44,6 @@ class TableState:
     high_water: int = 0  # rowid high-water mark for last_insert_id
     version: int = 0
 
-    def with_df(self, df: DataFrame, bump: bool = True) -> "TableState":
-        return replace(self, df=df, version=self.version + (1 if bump else 0))
-
     def visible_df(self) -> DataFrame:
         """The queryable projection: implicit-rowid tables store their
         hidden rowid column in ``df`` but never expose it through the

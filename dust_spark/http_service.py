@@ -6,7 +6,8 @@
   "statements": [{"sql": str, "parameters": [...]}]}}`` (the
   ExecuteRequest envelope, service.rs:130 + command crate) →
   200 with the JSON responses array; 400 on malformed JSON or engine
-  error; 404 for any other route (service.rs:117).
+  error; 500 with the message on any other failure; 404 for any other
+  route (service.rs:117).
 - ``POST /db/query`` → same envelope → list of Rows. The reference's
   router never wired this route (SURVEY.md §0 maturity note) although
   its store trait has ``query`` — we complete the intended surface.
@@ -19,11 +20,14 @@ the engine session, mirroring the reference's global store mutex
 from __future__ import annotations
 
 import json
+import logging
 import threading
 from http.server import BaseHTTPRequestHandler, ThreadingHTTPServer
 
 from dust_spark.model import Request, Statement, responses_to_json, rows_to_json
 from dust_spark.session import DustError, DustSession
+
+_log = logging.getLogger(__name__)
 
 
 def _parse_request(body: bytes) -> Request:
@@ -74,6 +78,11 @@ class DustHttpService:
                     self._reply(200, out.encode())
                 except DustError as e:
                     self._reply(400, str(e).encode())
+                except Exception as e:
+                    # anything else is an engine fault: answer it rather
+                    # than dropping the connection without a reply
+                    _log.exception("request to %s failed", self.path)
+                    self._reply(500, str(e).encode())
 
             def _reply(self, code: int, body: bytes):
                 self.send_response(code)

@@ -132,6 +132,72 @@ def _sql_literal(v: Any) -> str:
     return f"'{s}'"
 
 
+_MAX_ROWID = 2**63 - 1
+
+
+def _is_local_relation(df: DataFrame) -> bool:
+    """True when the optimizer folds ``df`` to a local relation, whose
+    collect runs no Spark job."""
+    plan = df._jdf.queryExecution().optimizedPlan()
+    return plan.getClass().getSimpleName() == "LocalRelation"
+
+
+def _deterministic(df: DataFrame) -> bool:
+    """True when evaluating ``df`` twice yields the same rows."""
+    return df._jdf.queryExecution().analyzed().deterministic()
+
+
+def _exact_literal_type(dt) -> bool:
+    """Key column types whose collected values ``_spark_literal`` renders
+    exactly and ``_key_of`` compares like Spark's equality."""
+    if isinstance(dt, T.StringType):
+        return dt.collation == "UTF8_BINARY"
+    return isinstance(dt, (T.LongType, T.DoubleType, T.BinaryType, T.BooleanType, T.DateType))
+
+
+def _spark_literal(v: Any, dt) -> str:
+    """Spark SQL text for a collected value of type ``dt`` (one of the
+    ``_exact_literal_type`` types) that evaluates back to the same value."""
+    if isinstance(dt, T.StringType):
+        return f"CAST(X'{v.encode().hex()}' AS STRING)"
+    if isinstance(dt, T.BinaryType):
+        return f"X'{bytes(v).hex()}'"
+    if isinstance(dt, T.LongType):
+        return f"CAST('{int(v)}' AS BIGINT)"
+    if isinstance(dt, T.DoubleType):
+        return f"CAST('{float(v)!r}' AS DOUBLE)"
+    if isinstance(dt, T.BooleanType):
+        return "true" if v else "false"
+    return f"DATE'{v.isoformat()}'"
+
+
+def _key_of(row, cols: list[str]) -> tuple | None:
+    """The UNIQUE key of a collected row, with -0.0 equal to 0.0, or None
+    when a column is NULL or NaN: such keys never conflict (SQLite
+    stores NaN as NULL; the general path's ``na.drop()`` agrees)."""
+    key = []
+    for c in cols:
+        v = row[c]
+        if v is None or v != v:
+            return None
+        if isinstance(v, float):
+            v += 0.0
+        elif isinstance(v, bytearray):
+            v = bytes(v)
+        key.append(v)
+    return tuple(key)
+
+
+def _moved_high_water(tdef: TableDef, high_water: int, mx) -> int:
+    """Rowid high-water after a statement that may have moved rowids,
+    given the table's new max rowid ``mx``. SQLite's next auto rowid is
+    max(rowid)+1, so moving the max moves the sequence either way
+    (sqlite3-probed; AUTOINCREMENT stays monotone). Every writer that
+    moves rowids goes through here, keeping high_water >= max(rowid):
+    the literal INSERT path relies on that to skip probing auto rowids."""
+    return max(high_water, int(mx or 0)) if tdef.autoincrement else int(mx or 0)
+
+
 class DustSession:
     """One engine session = one warehouse (disk mode) or a temp-view
     namespace (memory mode) — reference DB lifecycle A10
@@ -2142,8 +2208,9 @@ class DustSession:
             ]
         if default_values:
             # INSERT INTO t DEFAULT VALUES: one row, every column takes
-            # its default (or NULL / the next rowid)
-            src = self.spark.range(1).select()
+            # its default (or NULL / the next rowid) — a one-row local
+            # relation, so it folds like a VALUES batch
+            src = self.spark.sql("SELECT * FROM VALUES (0)").select()
             cols = []
         elif src_sql.upper().startswith("VALUES"):
             # static REAL literals in text contexts fold to SQLite's
@@ -2180,10 +2247,10 @@ class DustSession:
         self._check_strict_types(tdef, src, [(c, c) for c in cols])
 
         # insertion-order row number (auto-id + last_insert_id semantics)
-        if src_sql.upper().startswith("VALUES"):
-            # literal batches are driver-sized: the global window is fine
-            w = Window.orderBy(F.monotonically_increasing_id())
-            src = src.withColumn("__rn", F.row_number().over(w))
+        if values_src:
+            # over a local relation the id folds to 0..n-1 in literal
+            # order; a batch that does not fold is renumbered below
+            src = src.withColumn("__rn", F.monotonically_increasing_id())
         else:
             # INSERT...SELECT can be billions of rows: per-partition
             # row_number + collected partition offsets keeps the same
@@ -2231,6 +2298,20 @@ class DustSession:
         has_trig = any(
             t["table"] == ins.table.lower() for t in self.catalog.triggers.values()
         )
+        if values_src:
+            if (
+                not (has_trig or ins.or_ignore or ins.or_replace or tdef.strict)
+                and ins.on_conflict is None
+                and not (self._fk_enabled and tdef.foreign_keys)
+                and _is_local_relation(new_rows)
+            ):
+                resp = self._insert_literal(overlay, st, ins, new_rows, cols)
+                if resp is not None:
+                    return resp
+            # literal batches are driver-sized: the global window is fine
+            new_rows = new_rows.withColumn(
+                "__rn", F.row_number().over(Window.orderBy("__rn"))
+            )
         bi_pre_ignore = new_rows if (has_trig and ins.or_ignore) else None
 
         if ins.or_ignore:
@@ -2575,6 +2656,151 @@ class DustSession:
                 self._fire_triggers(overlay, tdef, trig_a, fired)
             self._last_insert_id = last_id  # body inserts must not leak out
         return Response(last_insert_id=last_id, rows_affected=n)
+
+    def _insert_literal(
+        self, overlay: Overlay, st: TableState, ins, batch: DataFrame, cols: list[str]
+    ) -> Response | None:
+        """Plain INSERT of a VALUES / DEFAULT VALUES batch that folds to a
+        local relation. The batch is evaluated once, on the driver, with
+        no Spark job: auto rowids, NOT NULL, CHECK, in-batch key
+        duplicates, the row count, high-water and last_insert_id all come
+        from that collect. Keys are checked against the table by one scan
+        that returns only the clashing rows. Errors follow SQLite's
+        per-row order: row by row, NOT NULL in column order, then CHECK,
+        then each key set. Returns None when a key column has no exact
+        literal form or an auto rowid would overflow; the caller then
+        takes the general path."""
+        tdef = st.tdef
+        rc = tdef.rowid_column
+        types = {f.name: f.dataType for f in tdef.schema.fields}
+        keysets = [(f"{tdef.name}.rowid", [rc])] if tdef.implicit_rowid and rc in cols else []
+        keysets += [(", ".join(f"{tdef.name}.{c}" for c in u), list(u)) for u in tdef.unique]
+        if not all(_exact_literal_type(types[c]) for _l, u in keysets for c in u):
+            return None
+
+        auto: set | None = None  # __rn of the auto-rowid rows; None = all of them
+        if rc is not None:
+            if rc in cols or rc in tdef.defaults:
+                # SQLite's sequential rule over the literal order: a NULL
+                # id takes (largest rowid so far — table high-water or an
+                # earlier explicit id) + 1
+                ids, auto, cur = [], set(), st.high_water
+                for rn, v in sorted(batch.select("__rn", rc).collect()):
+                    if v is None:
+                        cur += 1
+                        auto.add(rn)
+                        ids.append(cur)
+                    else:
+                        cur = max(cur, int(v))
+                        ids.append(int(v))
+                if auto:
+                    if cur > _MAX_ROWID:
+                        return None
+                    arr = ", ".join(_spark_literal(i, T.LongType()) for i in ids)
+                    batch = batch.withColumn(
+                        rc,
+                        F.expr(f"element_at(array({arr}), CAST(__rn AS INT) + 1)").cast(types[rc]),
+                    )
+            else:
+                batch = batch.withColumn(
+                    rc, (F.lit(st.high_water + 1) + F.col("__rn")).cast(types[rc])
+                )
+
+        flags = [
+            F.expr(f"NOT {self._check_pass_sql(expr, tdef)}").alias(f"__ck{i}")
+            for i, (_l, expr) in enumerate(tdef.checks)
+        ]
+        rows = sorted(
+            batch.select("__rn", *types, *flags).collect(), key=lambda r: r["__rn"]
+        )
+        n = len(rows)
+        if n == 0:
+            return self._ok(0)
+        if auto is None:
+            if rc is not None and st.high_water + n > _MAX_ROWID:
+                return None
+            auto = {r["__rn"] for r in rows} if rc is not None else set()
+
+        not_null = [c for c in types if c in tdef.not_null]
+        clash: list[set] | None = None
+        seen: list[set] = [set() for _ in keysets]
+        for r in rows:
+            for c in not_null:
+                if r[c] is None:
+                    raise DustError(f"NOT NULL constraint failed: {tdef.name}.{c}")
+            for i, (label, _e) in enumerate(tdef.checks):
+                if r[f"__ck{i}"]:
+                    raise DustError(f"CHECK constraint failed: {label}")
+            for k, (label, u) in enumerate(keysets):
+                key = _key_of(r, u)
+                if key is None:
+                    continue
+                dup = key in seen[k]
+                if not dup and not (u == [rc] and r["__rn"] in auto):
+                    # auto rowids lie above the high-water: never in the table
+                    if clash is None:
+                        clash = self._clashing_keys(st.df, tdef, keysets, rows, auto)
+                    dup = key in clash[k]
+                if dup:
+                    raise DustError(f"UNIQUE constraint failed: {label}")
+                seen[k].add(key)
+
+        if rc is not None:
+            high_water = max(st.high_water, max(r[rc] for r in rows))
+            last_id = rows[-1][rc]
+        else:
+            high_water = st.high_water + n
+            last_id = high_water
+        batch = batch.select("__rn", *types)
+        if self._capture_returning:
+            self._returning_df = batch.orderBy("__rn").drop("__rn")
+            self._returning_table = ins.table
+        # one partition per batch, like the windowed path, so a version
+        # adds one parquet file
+        out_df = st.df.unionByName(batch.drop("__rn").coalesce(1))
+        overlay.put(
+            ins.table,
+            overlay.catalog.materialize(
+                ins.table, TableState(tdef, out_df, high_water, st.version + 1)
+            ),
+        )
+        self._last_insert_id = last_id
+        return Response(last_insert_id=last_id, rows_affected=n)
+
+    def _clashing_keys(
+        self, existing: DataFrame, tdef: TableDef, keysets: list, rows: list, auto: set
+    ) -> list[set]:
+        """The batch keys, per key set, that some row of ``existing``
+        already holds: one filter scan over ``existing`` for all key sets
+        at once, returning only the matching rows (auto rowids skipped —
+        they lie above the high-water)."""
+        types = {f.name: f.dataType for f in tdef.schema.fields}
+        rc = tdef.rowid_column
+        conds, wanted = [], []
+        for _label, u in keysets:
+            want = {}
+            for r in rows:
+                if u == [rc] and r["__rn"] in auto:
+                    continue
+                key = _key_of(r, u)
+                if key is not None:
+                    want[key] = tuple(r[c] for c in u)
+            wanted.append(want)
+            if want:
+                lits = ", ".join(
+                    "(" + ", ".join(_spark_literal(v, types[c]) for v, c in zip(raw, u)) + ")"
+                    for raw in want.values()
+                )
+                target = ", ".join("`" + c.replace("`", "``") + "`" for c in u)
+                conds.append(f"({target}) IN ({lits})")
+        if not conds:
+            return [set() for _ in keysets]
+        key_cols = list(dict.fromkeys(c for _l, u in keysets for c in u))
+        hits = existing.filter(F.expr(" OR ".join(conds))).select(*key_cols).collect()
+        return [
+            {k for k in (_key_of(h, u) for h in hits) if k in want}
+            for (_l, u), want in zip(keysets, wanted)
+        ]
 
     def _override_rowids(self, new_rows: DataFrame, tdef, id_map: dict) -> DataFrame:
         """Replace upstream-assigned auto rowids with the sequential
@@ -3158,6 +3384,10 @@ class DustSession:
             self._last_insert_id = high_water
         else:
             high_water = st.high_water
+        if kind == "update" and tdef.rowid_column in sets:
+            # DO UPDATE SET moved rowids of existing rows
+            mx = out_df.agg(F.max(tdef.rowid_column)).collect()[0][0]
+            high_water = _moved_high_water(tdef, high_water, mx)
         new_st = overlay.catalog.materialize(
             ins.table, TableState(tdef, out_df, high_water, st.version + 1)
         )
@@ -3671,7 +3901,12 @@ class DustSession:
         if up.or_action:
             marked = self._update_resolve_conflicts(tdef, assigned, marked, up.or_action)
         marked = self._apply_generated(tdef, marked)
-        marked = marked.localCheckpoint(eager=True)
+        # triggers, conflict actions and FK actions can change rows the
+        # __m flag does not mark, so only a plain UPDATE narrows its
+        # checks to what it changed (see _check_constraints)
+        narrow = not (want_pairs or up.or_action or self._fk_enabled)
+        if not (narrow and _deterministic(marked)):
+            marked = marked.localCheckpoint(eager=True)
         pairs: list = []
         before_fired = False
         after_fired = False
@@ -3714,31 +3949,45 @@ class DustSession:
                     marked = marked.localCheckpoint(eager=True)
                     pairs = [p for i, p in enumerate(pairs) if i not in ign]
             marked = marked.drop("__tg_ord", *[f"__tg_{c}" for c in tg_cols])
-        n = marked.filter(F.col("__m") == 1).count()
-        changes_df = None
-        if fk_change_cols:
-            changes_df = marked.filter(F.col("__m") == 1)
-            marked = marked.drop(*[f"__fkold_{c}" for c in fk_change_cols])
-        new_df = marked.drop("__m")
         if self._capture_returning:
-            self._returning_df = marked.filter(F.col("__m") == 1).drop("__m")
+            self._returning_df = marked.filter(F.col("__m") == 1).drop(
+                "__m", *[f"__fkold_{c}" for c in fk_change_cols]
+            )
             self._returning_table = up.table
+        if narrow:
+            # generated columns may read any assigned column
+            changed = set(assigned) | set(tdef.generated)
+            stats = self._check_constraints(
+                overlay, tdef, marked, None, full_table=True, changed=changed
+            )
+            n = int(stats["__n"] or 0)
+            new_df = marked.drop("__m")
+            hw = st.high_water
+            # (narrow means FKs are off, so no cascade moves rowids)
+            if tdef.rowid_column in assigned:
+                hw = _moved_high_water(tdef, hw, stats["__mx"])
+        else:
+            n = marked.filter(F.col("__m") == 1).count()
+            changes_df = None
+            if fk_change_cols:
+                changes_df = marked.filter(F.col("__m") == 1)
+                marked = marked.drop(*[f"__fkold_{c}" for c in fk_change_cols])
+            new_df = marked.drop("__m")
+            # child FK actions first (a self-referencing ON UPDATE CASCADE
+            # fixes the post-image), then the table's own constraints on the
+            # final frame — SQLite checks FKs after actions have applied
+            new_df = self._check_child_fks(
+                overlay, up.table, new_df, dml="update", changes_df=changes_df
+            )
+            self._check_constraints(overlay, tdef, new_df, None, full_table=True)
+            hw = st.high_water
+            if self._moves_rowids(tdef, assigned):
+                mx = new_df.agg(F.max(tdef.rowid_column)).collect()[0][0]
+                hw = _moved_high_water(tdef, hw, mx)
 
-        # child FK actions first (a self-referencing ON UPDATE CASCADE
-        # fixes the post-image), then the table's own constraints on the
-        # final frame — SQLite checks FKs after actions have applied
-        new_df = self._check_child_fks(
-            overlay, up.table, new_df, dml="update", changes_df=changes_df
-        )
-        self._check_constraints(overlay, tdef, new_df, None, full_table=True)
-
-        hw = st.high_water
-        if tdef.rowid_column in assigned:
-            # SQLite's next auto rowid is max(rowid)+1, so an UPDATE
-            # that moves the max moves the sequence either way
-            # (sqlite3-probed; AUTOINCREMENT stays monotone)
-            mx = new_df.agg(F.max(tdef.rowid_column)).collect()[0][0]
-            hw = max(hw, int(mx or 0)) if tdef.autoincrement else int(mx or 0)
+        if n == 0 and not want_pairs:
+            self._keep_version(overlay, up.table, st, hw)
+            return self._ok(0)
         new_st = overlay.catalog.materialize(up.table, TableState(tdef, new_df, hw, st.version + 1))
         overlay.put(up.table, new_st)
         if pairs and not after_fired:
@@ -4008,7 +4257,11 @@ class DustSession:
             overlay, t, new_df, dml="update", changes_df=changes_df
         )
         self._check_constraints(overlay, tdef, new_df, None, full_table=True)
-        new_st = overlay.catalog.materialize(t, TableState(tdef, new_df, st.high_water, st.version + 1))
+        hw = st.high_water
+        if self._moves_rowids(tdef, assigned):
+            mx = new_df.agg(F.max(tdef.rowid_column)).collect()[0][0]
+            hw = _moved_high_water(tdef, hw, mx)
+        new_st = overlay.catalog.materialize(t, TableState(tdef, new_df, hw, st.version + 1))
         overlay.put(t, new_st)
         if pairs and not after_fired:
             self._fire_pairs(overlay, tdef, trig_b, trig_a, pairs, before_done=before_fired)
@@ -4097,6 +4350,10 @@ class DustSession:
             if pairs and not after_fired:
                 self._fire_pairs(overlay, st.tdef, trig_b, trig_a, pairs, before_done=before_fired)
             return self._ok(n)
+        rc = st.tdef.rowid_column
+        # post-delete high-water when it is cheap to know (see
+        # _post_delete_high_water); None = derive it from the new frame
+        hw: int | None = None
         if de.where is None:
             n = st.df.count()
             if self._capture_returning:
@@ -4104,12 +4361,29 @@ class DustSession:
                 self._returning_table = de.table
             victims_df = st.df if want_pairs else None
             new_df = self.spark.createDataFrame([], st.tdef.schema)
+            if not (want_pairs or self._fk_enabled):
+                hw = 0 if rc and not st.tdef.autoincrement else st.high_water
         else:
             new_df = self.spark.sql(
                 f"{with_prefix}SELECT * FROM __dust_stage AS `{de.table}` "
                 f"WHERE NOT coalesce(({de.where}), false)"
-            ).localCheckpoint(eager=True)
-            n = st.df.count() - new_df.count()
+            )
+            if want_pairs or self._fk_enabled or not _deterministic(new_df):
+                new_df = new_df.localCheckpoint(eager=True)
+                n = st.df.count() - new_df.count()
+            else:
+                # the deleted count and the surviving max rowid in one
+                # aggregation; the write re-reads the same rows
+                keep_rc = rc and not st.tdef.autoincrement
+                mx = "max(CASE WHEN NOT __del THEN __rc END)" if keep_rc else "NULL"
+                rc_col = f", `{rc}` AS __rc" if keep_rc else ""
+                stats = self.spark.sql(
+                    f"{with_prefix}SELECT count_if(__del) AS n, {mx} AS mx FROM "
+                    f"(SELECT coalesce(({de.where}), false) AS __del{rc_col} "
+                    f"FROM __dust_stage AS `{de.table}`)"
+                ).collect()[0]
+                n = int(stats["n"])
+                hw = int(stats["mx"] or 0) if keep_rc else st.high_water
             victims_df = (
                 self.spark.sql(
                     f"{with_prefix}SELECT * FROM __dust_stage AS `{de.table}` "
@@ -4163,14 +4437,34 @@ class DustSession:
                             ~F.col("__tg_ord").isin(bad)
                         ).drop("__tg_ord")
         new_df = self._check_child_fks(overlay, de.table, new_df, dml="delete")
+        if hw is None:
+            hw = self._post_delete_high_water(st, new_df)
+        if n == 0 and not want_pairs:
+            self._keep_version(overlay, de.table, st, hw)
+            return self._ok(0)
         new_st = overlay.catalog.materialize(
-            de.table,
-            TableState(st.tdef, new_df, self._post_delete_high_water(st, new_df), st.version + 1),
+            de.table, TableState(st.tdef, new_df, hw, st.version + 1)
         )
         overlay.put(de.table, new_st)
         if pairs and not after_fired:
             self._fire_pairs(overlay, st.tdef, trig_b, trig_a, pairs, before_done=before_fired)
         return self._ok(n)
+
+    def _moves_rowids(self, tdef: TableDef, assigned) -> bool:
+        """True when an UPDATE assigning ``assigned`` can change rowids:
+        it assigns the rowid column, or an ON UPDATE action of an
+        enforced FK over the rowid column may write it."""
+        rc = tdef.rowid_column
+        return rc is not None and (
+            rc in assigned
+            or (self._fk_enabled and any(rc in fk.columns for fk in tdef.foreign_keys))
+        )
+
+    def _keep_version(self, overlay: Overlay, name: str, st: TableState, high_water: int) -> None:
+        """A statement that changed no row writes no new version; only a
+        moved rowid high-water is staged."""
+        if high_water != st.high_water:
+            overlay.put(name, TableState(st.tdef, st.df, high_water, st.version))
 
     def _post_delete_high_water(self, st: TableState, new_df: DataFrame) -> int:
         """SQLite's auto-rowid base is max(rowid) over the CURRENT rows
@@ -4622,8 +4916,12 @@ class DustSession:
             if pairs:
                 self._fire_pairs(overlay, tdef, upd_b, upd_a, pairs)
             return new_child
+        hw = cst.high_water
+        if tdef.rowid_column in fk.columns:
+            mx = new_child.agg(F.max(tdef.rowid_column)).collect()[0][0]
+            hw = _moved_high_water(tdef, hw, mx)
         new_cst = overlay.catalog.materialize(
-            child, TableState(tdef, new_child, cst.high_water, cst.version + 1)
+            child, TableState(tdef, new_child, hw, cst.version + 1)
         )
         self._route(overlay, child).put(child, new_cst)
         if pairs:
@@ -4637,25 +4935,65 @@ class DustSession:
         new_rows: DataFrame,
         existing: DataFrame | None,
         full_table: bool = False,
-    ) -> None:
-        """NOT NULL → UNIQUE → FK, with SQLite error strings. For inserts
-        ``new_rows`` are the incoming rows and ``existing`` the current
-        table; for updates ``new_rows`` is the whole post-image
-        (full_table=True)."""
-        for c in sorted(tdef.not_null):
-            if new_rows.filter(F.col(c).isNull()).limit(1).count() > 0:
-                raise DustError(f"NOT NULL constraint failed: {tdef.name}.{c}")
+        changed: set[str] | None = None,
+    ):
+        """NOT NULL → CHECK → UNIQUE → FK, with SQLite error strings. For
+        inserts ``new_rows`` are the incoming rows and ``existing`` the
+        current table; for updates ``new_rows`` is the whole post-image
+        (full_table=True).
 
+        ``changed`` narrows an UPDATE's checks to what it changed: the
+        post-image then carries the ``__m`` changed-row flag and
+        ``changed`` names the columns the statement may have changed.
+        Rows and columns it left alone satisfied their constraints when
+        they were written. NOT NULL on the changed columns and every
+        CHECK are evaluated on the changed rows only, folded into one
+        aggregation that also counts them (``__n``) and takes the max
+        rowid (``__mx``); UNIQUE probes only the key sets that touch a
+        changed column. Returns that aggregation's row, else None."""
+        stats = None
         # CHECK constraints (SQLite enforces these on every write; the
         # reference inherits that via its pass-through, db/src/db.rs:176).
         # SQLite rule: a row passes when the expression is TRUE or NULL —
         # only FALSE/0 fails; error label = constraint name or expr text.
-        for label, expr in tdef.checks:
-            viol = new_rows.filter(F.expr(f"NOT {self._check_pass_sql(expr, tdef)}"))
-            if viol.limit(1).count() > 0:
-                raise DustError(f"CHECK constraint failed: {label}")
+        if changed is not None:
+            hit = F.col("__m") == 1
+            not_null = [c for c in sorted(tdef.not_null) if c in changed]
+            aggs = [F.sum("__m").alias("__n")]
+            if tdef.rowid_column in changed:
+                aggs.append(F.max(tdef.rowid_column).alias("__mx"))
+            aggs += [
+                F.max(F.when(hit & F.col(c).isNull(), 1)).alias(f"__nn{i}")
+                for i, c in enumerate(not_null)
+            ]
+            aggs += [
+                F.max(F.when(hit & F.expr(f"NOT {self._check_pass_sql(e, tdef)}"), 1)).alias(
+                    f"__ck{i}"
+                )
+                for i, (_l, e) in enumerate(tdef.checks)
+            ]
+            stats = new_rows.agg(*aggs).collect()[0]
+            for i, c in enumerate(not_null):
+                if stats[f"__nn{i}"]:
+                    raise DustError(f"NOT NULL constraint failed: {tdef.name}.{c}")
+            for i, (label, _e) in enumerate(tdef.checks):
+                if stats[f"__ck{i}"]:
+                    raise DustError(f"CHECK constraint failed: {label}")
+            if not stats["__n"]:
+                return stats  # no row changed, so no key can newly clash
+            new_rows = new_rows.drop("__m")
+        else:
+            for c in sorted(tdef.not_null):
+                if new_rows.filter(F.col(c).isNull()).limit(1).count() > 0:
+                    raise DustError(f"NOT NULL constraint failed: {tdef.name}.{c}")
+            for label, expr in tdef.checks:
+                viol = new_rows.filter(F.expr(f"NOT {self._check_pass_sql(expr, tdef)}"))
+                if viol.limit(1).count() > 0:
+                    raise DustError(f"CHECK constraint failed: {label}")
 
         for colset in tdef.unique:
+            if changed is not None and not changed.intersection(colset):
+                continue
             cand = new_rows.select(*colset).na.drop()
             label = ", ".join(f"{tdef.name}.{c}" for c in colset)
             # one job for both violation kinds (r14): the table invariant
@@ -4695,6 +5033,7 @@ class DustSession:
                 dangling = new_rows.filter(nn).join(ref.distinct(), on, "left_anti")
                 if dangling.limit(1).count() > 0:
                     raise DustError("FOREIGN KEY constraint failed")
+        return stats
 
     # ------------------------------------------------------------------
     # read path helpers

@@ -36,8 +36,9 @@ def spark():
         # tables are rows-to-hundreds — whole-stage Janino compilation
         # costs more than the interpreted row work (the bench's
         # interpret-small-input finding applied to the suite), and 2
-        # shuffle partitions cut per-job task overhead on the ~13-job
-        # OLTP statement path. Semantics identical; slice-sensitive
+        # shuffle partitions cut per-job task overhead on the OLTP
+        # statement path (1-3 jobs per statement, pinned in
+        # test_write_jobs.py). Semantics identical; slice-sensitive
         # tests pass explicit n_slices.
         .config("spark.sql.codegen.wholeStage", "false")
         .config("spark.ui.enabled", "false")

@@ -104,3 +104,19 @@ def test_pragma_call_form_over_http(service):
     ]}})
     assert status == 200
     assert body == '[{"columns":[],"types":[],"values":[]}]'
+
+
+def test_unexpected_error_500(service, monkeypatch):
+    """A failure that is not a DustError answers 500 with its message
+    instead of closing the connection without a reply."""
+
+    def boom(self, req):
+        raise RuntimeError("engine fault")
+
+    monkeypatch.setattr(DustSession, "execute", boom)
+    with pytest.raises(urllib.error.HTTPError) as e:
+        _post(service, "/db/execute", {"request": {"transaction": False, "statements": [
+            {"sql": "SELECT 1", "parameters": []},
+        ]}})
+    assert e.value.code == 500
+    assert e.value.read() == b"engine fault"
